@@ -64,12 +64,6 @@ _SYS_TYPES = {
 }
 
 
-def _atomic_write_json(path: str, obj: Any) -> None:
-    # local: tmp + os.replace; URI paths (hdfs://, s3a://): Hadoop FS —
-    # see plans/fsio.py for the atomicity contract per scheme
-    fsio.write_json_atomic(path, obj)
-
-
 def bucket_expr(key: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key]), F.lit(n_buckets)).cast("int")
 
@@ -314,19 +308,31 @@ def zorder_column(cols: list[str], ranges: dict[str, tuple[float, float]],
     return z
 
 
-def _group_head(key: list[str], w) -> Column:
-    """Head-of-key-group predicate under a (key, seq desc) sort: no previous
-    row, or ANY key part differs from it. eqNullSafe keeps the predicate
-    two-valued — with a null key column a plain != yields null, and
-    filter() would silently drop the row (data loss) instead of keeping the
-    group head. Null-key events are quarantined upstream, but the merge
-    must stay loss-free even if one slips through."""
-    prev = [F.lag(F.col(c)).over(w) for c in key]
+def _lww_winners(df: DataFrame, key: list[str]) -> DataFrame:
+    """Per-key last-writer-wins winners of ``df``, which the caller has
+    already distributed by its ``_bucket`` column (a function of the key,
+    so every version of a key shares a partition): sort within partitions
+    by (key, _commit_seq desc, _event_seq desc, _delta_seq desc) and keep
+    each key group's head — per-key LWW with no exchange of its own. The
+    final _delta_seq tie-break lets the later-written of two byte-unequal
+    rows with equal sequences win (drift re-merge, crash replay).
+
+    Head of group: no previous row, or ANY key part differs from it.
+    eqNullSafe keeps the predicate two-valued — with a null key column a
+    plain != yields null, and filter() would silently drop the row (data
+    loss) instead of keeping the group head. Null-key events are
+    quarantined upstream, but the merge must stay loss-free even if one
+    slips through."""
+    w = Window.partitionBy("_bucket").orderBy(
+        *[F.col(c) for c in key],
+        F.col("_commit_seq").desc(),
+        F.col("_event_seq").desc(),
+        F.col("_delta_seq").desc(),
+    )
     head = F.lag(F.lit(1)).over(w).isNull()  # true iff no previous row
-    diff = F.lit(False)
-    for c, p in zip(key, prev):
-        diff = diff | ~p.eqNullSafe(F.col(c))
-    return head | diff
+    for c in key:
+        head = head | ~F.lag(F.col(c)).over(w).eqNullSafe(F.col(c))
+    return df.withColumn("_head", head).filter(F.col("_head")).drop("_head")
 
 
 class IceliteTable:
@@ -384,7 +390,7 @@ class IceliteTable:
         }
         if bloom_cols:
             snap["bloom_cols"] = list(bloom_cols)
-        _atomic_write_json(fsio.join(t.meta_dir, "v0.json"), snap)
+        fsio.write_json_atomic(fsio.join(t.meta_dir, "v0.json"), snap)
         fsio.publish_json(fsio.join(t.meta_dir, "VERSION"), 0)
         return t
 
@@ -433,13 +439,6 @@ class IceliteTable:
             self._bloom_cols_memo = memo
         return memo
 
-    def _bucket_entries(self, bdir: str, schema_version: int, kind: str | None = None) -> list[dict]:
-        return [
-            self._file_entry(fsio.join(bdir, fn), schema_version, kind)
-            for fn in fsio.listdir(bdir)
-            if fn.endswith(".parquet")
-        ]
-
     def _bucket_entries_par(
         self, bdirs: list[tuple[str, str]], schema_version: int, kind: str | None = None
     ) -> dict[str, list[dict]]:
@@ -449,19 +448,64 @@ class IceliteTable:
         buckets was paying N serial opens on the driver."""
         from concurrent.futures import ThreadPoolExecutor
 
+        def entries(bdir: str) -> list[dict]:
+            return [
+                self._file_entry(fsio.join(bdir, fn), schema_version, kind)
+                for fn in fsio.listdir(bdir)
+                if fn.endswith(".parquet")
+            ]
+
         self._bloom_cols()  # populate the memo before fanning out
         if len(bdirs) <= 1:
-            return {b: self._bucket_entries(d, schema_version, kind) for b, d in bdirs}
+            return {b: entries(d) for b, d in bdirs}
         # pyarrow releases the GIL for the footer read; size the pool to
         # the local cores (a 64-bucket commit at 16 threads paid 4 serial
         # rounds of opens — r06)
         width = min(os.cpu_count() or 16, len(bdirs))
         with ThreadPoolExecutor(max_workers=width) as ex:
-            futs = [
-                (b, ex.submit(self._bucket_entries, d, schema_version, kind))
-                for b, d in bdirs
-            ]
-            return {b: f.result() for b, f in futs}
+            return dict(zip([b for b, _ in bdirs], ex.map(entries, [d for _, d in bdirs])))
+
+    def _write_buckets(
+        self,
+        snap: dict,
+        df: DataFrame,
+        replace=(),
+        kind: str | None = None,
+        base: dict[str, list[dict]] | None = None,
+        max_rows_per_file: int | None = None,
+    ) -> tuple[dict[str, list[dict]], int]:
+        """Write ``df`` — already distributed by its ``_bucket`` column —
+        as the data files of snapshot ``snapshot_id + 1`` and splice their
+        manifest entries into the bucket map ``base`` (default: ``snap``'s).
+        Delta files (``kind="delta"``) are appended after a bucket's
+        existing entries; any other write replaces the buckets it wrote,
+        and a bucket named in ``replace`` that wrote no file becomes empty.
+        Every other bucket keeps its entries as they were. Returns the new
+        bucket map and the number of buckets written."""
+        out_dir = fsio.join(self.data_dir, f"snap{snap['snapshot_id'] + 1}")
+        writer = df.write.mode("overwrite")
+        if max_rows_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
+        writer.partitionBy("_bucket").parquet(out_dir)
+        bdirs = [
+            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
+            for entry in fsio.listdir(out_dir)
+            if entry.startswith("_bucket=")
+        ]
+        buckets = {b: list(fs) for b, fs in (snap["buckets"] if base is None else base).items()}
+        for b in replace:
+            buckets[str(b)] = []
+        for b, entries in self._bucket_entries_par(bdirs, snap["schema_version"], kind).items():
+            buckets[b] = buckets.get(b, []) + entries if kind == "delta" else entries
+        return buckets, len(bdirs)
+
+    def _commit_child(self, snap: dict, lineage: dict, publish: bool = True, **fields) -> int:
+        """Commit ``snap``'s content updated with ``fields`` as its child:
+        snapshot ``snapshot_id + 1`` with parent ``snapshot_id``."""
+        sid = snap["snapshot_id"] + 1
+        self._commit({**snap, **fields, "snapshot_id": sid,
+                      "parent": snap["snapshot_id"], "lineage": lineage}, publish)
+        return sid
 
     def current_snapshot_id(self) -> int:
         # replace-safe pointer: on remote stores this resolves the newest
@@ -563,7 +607,12 @@ class IceliteTable:
             # LWW now (one bucket-shuffle + sort, same shape as the merge).
             # ``_resolve=False`` (compact) hands the raw base∪delta rows to
             # a caller that fuses the resolve into its own bucket shuffle.
-            out = _resolve_lww(out, snap["key"], snap["n_buckets"])
+            key = snap["key"]
+            out = _lww_winners(
+                out.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
+                .repartition(F.col("_bucket")),
+                key,
+            ).drop("_bucket")
         if not include_deleted:
             out = out.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
         return out
@@ -928,20 +977,13 @@ class IceliteTable:
                 raise ValueError(f"add: column {name!r} exists")
             fields.append({"id": next_id, "name": name, "type": dtype.json()})
             next_id += 1
-        new_sid = snap["snapshot_id"] + 1
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "schema_version": cur_ver + 1,
-                "schemas": {**snap["schemas"], str(cur_ver + 1): fields},
-                "next_field_id": next_id,
-                "lineage": lineage or {"op": "alter", "renames": renames, "adds": [a[0] for a in adds]},
-            }
+        return self._commit_child(
+            snap,
+            lineage or {"op": "alter", "renames": renames, "adds": [a[0] for a in adds]},
+            schema_version=cur_ver + 1,
+            schemas={**snap["schemas"], str(cur_ver + 1): fields},
+            next_field_id=next_id,
         )
-        self._commit(new_snap)
-        return new_sid
 
     # ---------------- MERGE-ON-READ (delta append + read-time resolve) ---------
 
@@ -986,36 +1028,12 @@ class IceliteTable:
             (F.col("op") == "D").alias("_deleted"),
             F.col("_bucket"),
         )
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        delta.repartition(width, F.col("_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(out_dir)
-
-        new_buckets = {b: list(files) for b, files in snap["buckets"].items()}
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        written = len(bdirs)
-        for b, entries in self._bucket_entries_par(
-            bdirs, snap["schema_version"], kind="delta"
-        ).items():
-            new_buckets.setdefault(b, [])
-            new_buckets[b] += entries
+        buckets, written = self._write_buckets(
+            snap, delta.repartition(width, F.col("_bucket")), kind="delta")
         if written == 0:  # empty change-set discovered post-write
             return snap["snapshot_id"], {"affected_buckets": 0}
         n_affected = written if affected is None else len(affected)
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "merge_mor"},
-            }
-        )
-        self._commit(new_snap, publish=publish)
+        self._commit_child(snap, lineage or {"op": "merge_mor"}, publish, buckets=buckets)
         return new_sid, {"affected_buckets": n_affected, "snapshot_id": new_sid}
 
     def delta_file_count(self) -> int:
@@ -1070,51 +1088,18 @@ class IceliteTable:
         # two full exchanges of the table per compaction. Instead take the
         # raw base∪delta rows, distribute by bucket ONCE, sort within
         # partitions by (key, seq desc) and keep each key group's head —
-        # byte-identical winners (same comparator as _resolve_lww), half
+        # byte-identical winners (the same _lww_winners as read()), half
         # the data movement.
         raw = self.read(buckets=buckets, include_deleted=True, _resolve=False)
-        out_cols = raw.columns
-        w = Window.partitionBy("_bucket").orderBy(
-            *[F.col(c) for c in key],
-            F.col("_commit_seq").desc(),
-            F.col("_event_seq").desc(),
-            F.col("_delta_seq").desc(),
-        )
-        resolved = (
+        resolved = _lww_winners(
             raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
-            .repartition(self._merge_partitions(len(buckets)), F.col("_bucket"))
-            .withColumn("_first", _group_head(key, w))
-            .filter(F.col("_first"))
-            .select(*out_cols, "_bucket")
+            .repartition(self._merge_partitions(len(buckets)), F.col("_bucket")),
+            key,
         )
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        (
-            resolved.write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out_dir)
-        )
-        new_buckets = {b: list(files) for b, files in snap["buckets"].items()}
-        for b in buckets:  # a compacted bucket that came out empty stays empty
-            new_buckets[str(b)] = []
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        for b, entries in self._bucket_entries_par(bdirs, snap["schema_version"]).items():
-            new_buckets[b] = entries
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "compact", "buckets": buckets},
-            }
-        )
-        self._commit(new_snap)
-        return new_sid
+        # a compacted bucket that came out empty stays empty
+        new_buckets, _ = self._write_buckets(snap, resolved, replace=buckets)
+        return self._commit_child(
+            snap, lineage or {"op": "compact", "buckets": buckets}, buckets=new_buckets)
 
     def _global_ranges(self, snap: dict, cols: list[str]
                        ) -> dict[str, tuple[float, float]] | None:
@@ -1168,6 +1153,8 @@ class IceliteTable:
         compact scopes its buckets."""
         if not sort_cols:
             raise ValueError("cluster() needs at least one sort column")
+        if max_rows_per_file is not None and max_rows_per_file < 1:
+            raise ValueError(f"max_rows_per_file must be >= 1, got {max_rows_per_file}")
         snap = self.snapshot()
         key, nb = snap["key"], snap["n_buckets"]
         non_empty = [b for b, fs in snap["buckets"].items() if fs]
@@ -1197,8 +1184,6 @@ class IceliteTable:
             resolved = resolved.withColumn(
                 "_z", zorder_column(sort_cols, ranges, bits=zorder_bits))
             order = ["_bucket", "_z"]
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
         clustered = (
             resolved.withColumn("_bucket", bucket_expr(key, nb))
             .repartition(self._merge_partitions(len(non_empty)), F.col("_bucket"))
@@ -1206,33 +1191,15 @@ class IceliteTable:
         )
         if zorder:
             clustered = clustered.drop("_z")
-        writer = clustered.write.mode("overwrite").partitionBy("_bucket")
-        if max_rows_per_file is not None:
-            if max_rows_per_file < 1:
-                raise ValueError(f"max_rows_per_file must be >= 1, got {max_rows_per_file}")
-            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
-        writer.parquet(out_dir)
-        new_buckets: dict[str, list] = {b: [] for b in snap["buckets"]}
-        for entry in fsio.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = fsio.join(out_dir, entry)
-            new_buckets[b] = self._bucket_entries(bdir, snap["schema_version"])
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "clustered_by": list(sort_cols),
-                "zordered": bool(zorder),
-                "lineage": lineage or {"op": "cluster", "sort_cols": list(sort_cols),
-                                       "zorder": bool(zorder)},
-            }
+        new_buckets, _ = self._write_buckets(snap, clustered, replace=snap["buckets"],
+                                             max_rows_per_file=max_rows_per_file)
+        return self._commit_child(
+            snap,
+            lineage or {"op": "cluster", "sort_cols": list(sort_cols), "zorder": bool(zorder)},
+            buckets=new_buckets,
+            clustered_by=list(sort_cols),
+            zordered=bool(zorder),
         )
-        self._commit(new_snap)
-        return new_sid
 
     # ---------------- MERGE (copy-on-write, bucketed, LWW vs state) ----------------
 
@@ -1278,11 +1245,7 @@ class IceliteTable:
         if not affected:
             return snap["snapshot_id"], {"affected_buckets": 0, "rows_written": 0}
 
-        old = (
-            self.read(buckets=affected, include_deleted=True)
-            .withColumn("_bucket", bexpr)
-            .withColumn("_is_change", F.lit(0))
-        )
+        old = self.read(buckets=affected, include_deleted=True).withColumn("_bucket", bexpr)
         new_sid = snap["snapshot_id"] + 1
         chn = ch.select(
             *[F.col(c) for c in data_cols],
@@ -1291,63 +1254,26 @@ class IceliteTable:
             F.lit(new_sid).cast("long").alias("_delta_seq"),
             (F.col("op") == "D").alias("_deleted"),
             F.col("_bucket"),
-            F.lit(1).alias("_is_change"),
         )
-        unioned = old.unionByName(chn)
         # ONE shuffle total: distribute by bucket (a key lives in exactly one
         # bucket), sort within partitions by (key, seq desc), and keep the
         # first row of each key group — per-key LWW without a second
         # exchange, and the output is already bucket-clustered for the
         # partitionBy write. (A window partitioned by the full key would
         # shuffle on key and then AGAIN on bucket — 2x the data movement.)
-        w = Window.partitionBy("_bucket").orderBy(
-            *[F.col(c) for c in key],
-            F.col("_commit_seq").desc(),
-            F.col("_event_seq").desc(),
-            F.col("_delta_seq").desc(),
-            F.col("_is_change").desc(),
+        # A change row outranks a stored row with equal sequences: its
+        # _delta_seq (this commit's id) exceeds every stored one, and
+        # stored nulls sort last.
+        # The per-key winner is kept even when it is a delete: tombstones
+        # carry the delete's sequence so older late events cannot win later.
+        survivors = _lww_winners(
+            old.unionByName(chn).repartition(
+                self._merge_partitions(len(affected)), F.col("_bucket")),
+            key,
         )
-        # the per-key winner is kept even when it is a delete: tombstones
-        # carry the delete's sequence so older late events cannot win later
-        survivors = (
-            unioned.repartition(self._merge_partitions(len(affected)), F.col("_bucket"))
-            .withColumn("_first", _group_head(key, w))
-            .filter(F.col("_first"))
-            .select(*data_cols, *SYS_COLS, "_bucket")
-        )
-
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        survivors.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-
-        new_buckets = dict(snap["buckets"])
-        rows_written = 0
-        written_buckets = set()
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        for b, entries in self._bucket_entries_par(bdirs, snap["schema_version"]).items():
-            new_buckets[str(int(b))] = entries
-            written_buckets.add(int(b))
-        # an affected bucket whose rows all got deleted writes no dir -> empty it
-        for b in affected:
-            if b not in written_buckets:
-                new_buckets[str(b)] = []
-
-        stats = {"affected_buckets": len(affected), "snapshot_id": new_sid}
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "merge"},
-            }
-        )
-        self._commit(new_snap, publish=publish)
-        return new_sid, stats
+        new_buckets, _ = self._write_buckets(snap, survivors, replace=affected)
+        self._commit_child(snap, lineage or {"op": "merge"}, publish, buckets=new_buckets)
+        return new_sid, {"affected_buckets": len(affected), "snapshot_id": new_sid}
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
         """Storage hygiene for a long-running table: delete snapshot metadata
@@ -1374,15 +1300,17 @@ class IceliteTable:
                     if fe["path"] not in live_files and fsio.exists(fe["path"]):
                         fsio.remove(fe["path"])
             fsio.remove(fsio.join(self.meta_dir, f"v{sid}.json"))
-        # drop now-empty snapshot data dirs (local only: object stores have
-        # no real directories, and HDFS tolerates empty dirs harmlessly)
+        # drop snapshot data dirs left with no data file — only Hadoop
+        # sidecars (.crc, _SUCCESS), or an empty merge_mor append that never
+        # committed (local only: object stores have no real directories,
+        # and HDFS tolerates empty dirs harmlessly)
         if not fsio.is_remote(self.data_dir):
             import shutil
 
             for entry in os.listdir(self.data_dir):
                 d = os.path.join(self.data_dir, entry)
-                if os.path.isdir(d) and not any(
-                    files for _, _, files in os.walk(d)
+                if entry.startswith("snap") and not any(
+                    fn.endswith(".parquet") for _, _, fns in os.walk(d) for fn in fns
                 ):
                     shutil.rmtree(d, ignore_errors=True)
         return expire
@@ -1445,43 +1373,22 @@ class IceliteTable:
         if n_buckets is not None and n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         key, nb = snap["key"], (n_buckets if n_buckets is not None else snap["n_buckets"])
-        data_cols = self.field_names(snap)
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        (
-            df.withColumn("_bucket", bucket_expr(key, nb))
-            .repartition(nb, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out_dir)
+        new_buckets, _ = self._write_buckets(
+            snap,
+            df.withColumn("_bucket", bucket_expr(key, nb)).repartition(nb, F.col("_bucket")),
+            replace=range(nb),
+            base={},
         )
-        new_buckets: dict[str, list] = {str(b): [] for b in range(nb)}
-        for entry in fsio.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = fsio.join(out_dir, entry)
-            new_buckets[b] = self._bucket_entries(bdir, snap["schema_version"])
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "n_buckets": nb,
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "overwrite"},
-            }
-        )
-        if extra_meta:
-            new_snap.update(extra_meta)
-        self._commit(new_snap)
-        return new_sid
+        return self._commit_child(snap, lineage or {"op": "overwrite"}, n_buckets=nb,
+                                  buckets=new_buckets, **(extra_meta or {}))
 
     # ---------------- commit ----------------
 
     def _commit(self, snap: dict, publish: bool = True) -> None:
         sid = snap["snapshot_id"]
-        _atomic_write_json(fsio.join(self.meta_dir, f"v{sid}.json"), snap)
+        # local: tmp + os.replace; URI paths (hdfs://, s3a://): Hadoop FS —
+        # see plans/fsio.py for the atomicity contract per scheme
+        fsio.write_json_atomic(fsio.join(self.meta_dir, f"v{sid}.json"), snap)
         if publish:
             fsio.publish_json(fsio.join(self.meta_dir, "VERSION"), sid)
 
@@ -1498,14 +1405,9 @@ class IceliteTable:
         cur = self.snapshot()
         if snapshot_id == cur["snapshot_id"]:
             return snapshot_id
-        new_snap = dict(target)
-        new_snap.update({
-            "snapshot_id": cur["snapshot_id"] + 1,
-            "parent": cur["snapshot_id"],
-            "lineage": lineage or {"op": "rollback", "to": snapshot_id},
-        })
-        self._commit(new_snap)
-        return new_snap["snapshot_id"]
+        # the target's content, committed as the current head's child
+        return self._commit_child({**target, "snapshot_id": cur["snapshot_id"]},
+                                  lineage or {"op": "rollback", "to": snapshot_id})
 
     def refs(self) -> dict[str, int]:
         """Named refs (tags): a replace-safe pointer file mapping
@@ -1568,27 +1470,6 @@ class IceliteTable:
         mpath = fsio.join(self.meta_dir, f"v{snapshot_id}.json")
         if fsio.exists(mpath):
             fsio.remove(mpath)
-
-
-def _resolve_lww(df: DataFrame, key: list[str], n_buckets: int) -> DataFrame:
-    """Per-key LWW winner across unresolved rows: one bucket-distribution
-    shuffle + sort-within-partitions + lag head-of-group (same shape as the
-    CoW merge; byte-unequal ties — drift re-merge, crash replay — resolve
-    to the later _delta_seq)."""
-    cols = [c for c in df.columns]
-    b = bucket_expr(key, n_buckets)
-    w = Window.partitionBy("_rb").orderBy(
-        *[F.col(c) for c in key],
-        F.col("_commit_seq").desc(),
-        F.col("_event_seq").desc(),
-        F.col("_delta_seq").desc(),  # later-written delta wins byte-unequal ties
-    )
-    with_b = df.withColumn("_rb", b).repartition(F.col("_rb"))
-    return (
-        with_b.withColumn("_head", _group_head(key, w))
-        .filter(F.col("_head"))
-        .select(*cols)
-    )
 
 
 def _type_from_json(tj: str) -> T.DataType:

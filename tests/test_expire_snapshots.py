@@ -39,3 +39,38 @@ def test_expire_snapshots(spark, tmp_path):
         for files in t.snapshot(s)["buckets"].values():
             for fe in files:
                 assert os.path.exists(fe["path"]), fe["path"]
+
+
+def test_expire_snapshots_reclaims_data_dirs(spark, tmp_path):
+    """After expiry, data/ holds exactly the snapshot dirs that retained
+    manifests reference: expired dirs keep no Hadoop sidecars (.crc,
+    _SUCCESS) behind, and an empty merge-on-read append's uncommitted
+    dir is reclaimed too."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("v", T.LongType())])
+    t = IceliteTable.create(spark, str(tmp_path / "t"), schema, key=["k"], n_buckets=4)
+
+    def chset(rows, seq):
+        df = spark.createDataFrame(rows, "k long, v long, op string")
+        return df.select("k", "v", "op", F.lit(seq).alias("commit_seq"),
+                         F.col("k").alias("event_seq"))
+
+    t.merge(chset([(k, k, "U") for k in range(20)], 1))
+    for seq in range(2, 6):
+        t.merge_mor(chset([(k, k * seq, "U") for k in range(seq, 20, 3)], seq))
+        if seq % 2:
+            t.compact(min_deltas=1)
+    sid = t.current_snapshot_id()
+    assert t.merge_mor(chset([], 9))[0] == sid  # empty change-set: no commit
+    before = sorted((r["k"], r["v"]) for r in t.read().collect())
+
+    t.expire_snapshots(keep_last=1)
+    referenced = {
+        os.path.basename(os.path.dirname(os.path.dirname(fe["path"])))
+        for files in t.snapshot()["buckets"].values()
+        for fe in files
+    }
+    assert sorted(os.listdir(t.data_dir)) == sorted(referenced)
+    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == before

@@ -44,26 +44,22 @@ def test_compact_single_exchange_and_identical_state(spark, mor_tbl):
     (resolve + bucket-clustered write share it) and the compacted state
     equals the pre-compaction resolved read."""
     before = {(r["k"],): r["v"] for r in mor_tbl.read().collect()}
-    # plan-shape evidence: rebuild the fused resolve plan the way
-    # compact() does and count exchanges in its explain
+    # plan-shape evidence: build the fused resolve plan from the shared
+    # LWW function compact() runs and count exchanges in its explain
     import contextlib
     import io
 
-    from pyspark.sql import Window
-
-    from nifi_processors_spark.plans.table import _group_head, bucket_expr
+    from nifi_processors_spark.plans.table import _lww_winners, bucket_expr
 
     snap = mor_tbl.snapshot()
     raw = mor_tbl.read(buckets=mor_tbl.delta_buckets(1), include_deleted=True,
                        _resolve=False)
     key = snap["key"]
-    w = Window.partitionBy("_bucket").orderBy(
-        *[F.col(c) for c in key], F.col("_commit_seq").desc(),
-        F.col("_event_seq").desc(), F.col("_delta_seq").desc())
-    fused = (raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
-             .repartition(2, F.col("_bucket"))
-             .withColumn("_first", _group_head(key, w))
-             .filter(F.col("_first")).select(*raw.columns, "_bucket"))
+    fused = _lww_winners(
+        raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
+        .repartition(2, F.col("_bucket")),
+        key,
+    )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         fused.explain("simple")
